@@ -21,8 +21,10 @@ Design notes (100 TB posture):
   hash-aggregate back (min/sum are codegen-friendly), and the Aggregate node
   doubles as a materialization barrier.  Measured on the fixture: the
   relational form is ~25× faster than the nested-HOF form.
-- MinHash signatures: one shuffle (groupBy doc_id) with map-side partial
-  aggregation of 128 ``min(xxhash64(shingle, i))`` columns.
+- MinHash signatures: one shuffle (groupBy doc_id, chunk) with map-side
+  partial aggregation of ``min(xxhash64(shingle, i))`` — 16 chunk rows of
+  8 members per document, so the aggregate stays under the codegen field
+  limit (see ``MINHASH_CHUNK``).
 - Exact-Jaccard verification of LSH candidates touches only the candidate
   pairs, never the corpus squared.
 - The brute-force cosine top-k broadcasts the (small) query set and scans
@@ -587,6 +589,65 @@ MINHASH_HASHES = 128
 MINHASH_BANDS = 32
 MINHASH_ROWS = 4
 MINHASH_THRESHOLD = 0.8
+#: Signature members per aggregate row (two whole bands).  The signature is
+#: aggregated as 16 chunk rows per document, not one 128-column row, to stay
+#: under two limits: ``spark.sql.codegen.maxFields`` (100) — a 129-field
+#: aggregate falls out of whole-stage codegen and runs interpreted, partial,
+#: final and the band Generate alike — and HotSpot's 8000-byte huge-method
+#: limit: a 64-member row is whole-stage generated, but its method is
+#: larger than that, so the JIT never compiles it.  Warm latency of the op
+#: at sf0.1 by members per row (median of 5 runs on 4 cores; 128 in one
+#: row: 2.09–2.45 s): 64 → 2.59 s, 32 → 1.46 s, 16 → 1.19 s, 8 → 1.06 s,
+#: 4 → 1.17 s.
+MINHASH_CHUNK = 8
+
+
+def _minhash_bands(sh: DataFrame) -> DataFrame:
+    """(doc_id, h) shingle rows → (doc_id, band_id, band_key) LSH band rows.
+
+    Hash family: member i is ``xxhash64(h, i)`` with ``i`` an int seed —
+    the shingle STRING is hashed once at explode time (``_shingle_rows``)
+    and the 128 members are long-input rehashes of that 64-bit identity.
+    Each shingle row is exploded to 16 chunk rows ``c``; one hash aggregate
+    on ``(doc_id, c)`` takes the 8 minima of members ``c*8 .. c*8+7``, and
+    each chunk row yields its 2 bands ``c*2 + j`` keyed on
+    ``xxhash64`` of 4 members.  Every member and band key is bit-identical
+    to the 128-column one-row formulation; see ``MINHASH_CHUNK`` for why
+    the signature is chunked.  The members must be INDEPENDENT hashes, not
+    a Kirsch–Mitzenmacher linear family ``h1 + i*h2``: under a linear
+    family the argmin of a small shingle set follows the lower envelope of
+    n lines across i — adjacent members become highly correlated, entire
+    bands agree/disagree together, and measured recall at sf0.1 dropped to
+    ~99% (3 of 256 true J>=0.8 pairs missed) vs the ~5e-8 theoretical miss
+    rate that independent members restore."""
+    chunks = F.sequence(F.lit(0), F.lit(MINHASH_HASHES // MINHASH_CHUNK - 1))
+    bands_per_chunk = MINHASH_CHUNK // MINHASH_ROWS
+    c = F.col("c")
+    sig = (
+        sh.select("doc_id", "h", F.explode(chunks).alias("c"))
+        .groupBy("doc_id", "c")
+        .agg(
+            *[
+                F.min(F.xxhash64("h", (c * MINHASH_CHUNK + i).cast("int")))
+                .alias(f"m{i}")
+                for i in range(MINHASH_CHUNK)
+            ]
+        )
+    )
+    band_structs = F.array(
+        *[
+            F.struct(
+                (c * bands_per_chunk + j).alias("band_id"),
+                F.xxhash64(
+                    *[f"m{j * MINHASH_ROWS + r}" for r in range(MINHASH_ROWS)]
+                ).alias("band_key"),
+            )
+            for j in range(bands_per_chunk)
+        ]
+    )
+    return sig.select("doc_id", F.explode(band_structs).alias("band")).select(
+        "doc_id", "band.band_id", "band.band_key"
+    )
 
 
 @register(
@@ -601,54 +662,27 @@ MINHASH_THRESHOLD = 0.8
 def x_llm_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash + banded LSH near-dup detection (J >= 0.8), exact-verified.
 
-    Pipeline: shingle rows → 128-permutation minhash signature as ONE
-    hash aggregate (``min(xxhash64(s, i))`` per i — map-side partials, one
-    shuffle, full codegen; ``xxhash64(s, i)`` is the i-th hash family
-    member) → 32 band keys hashed straight from 4 signature columns each →
-    explode → equi-self-join on (band_id, band_key) → distinct candidate
+    Pipeline: shingle rows → 32 band keys per document from a 128-member
+    minhash signature (``_minhash_bands``: one hash aggregate over 16
+    chunk rows of 8 members — map-side partials, one shuffle, whole-stage
+    codegen) → equi-self-join on (band_id, band_key) → distinct candidate
     pairs → EXACT Jaccard verification on just those pairs → threshold.
 
     The oracle is the exact all-pairs answer: with (32 bands × 4 rows) the
     miss probability at J >= 0.8 is ~5e-8, and verification removes every
     false positive, so LSH output ≡ exact output.
 
-    Hash family: member i is ``xxhash64(h, i)`` — the shingle STRING is
-    hashed once at explode time (``_shingle_rows``), and the 128 family
-    members are long-input rehashes of that 64-bit identity, all
-    whole-stage codegen inside the aggregate.  The members must be
-    INDEPENDENT hashes, not a Kirsch–Mitzenmacher linear family
-    ``h1 + i*h2``: under a linear family the argmin of a small shingle set
-    follows the lower envelope of n lines across i — adjacent family
-    members become highly correlated, entire bands agree/disagree
-    together, and measured recall at sf0.1 dropped to ~99% (3 of 256 true
-    J>=0.8 pairs missed) vs the ~5e-8 theoretical miss rate that
-    independent members (this formulation) restore.
+    Rejected levers (warm latency at sf0.1, 8-member chunks at 1.06 s):
+    ``-XX:-DontCompileHugeMethods`` left the 128-column form at 2.34 s,
+    and broadcasting the candidates instead of the shingle frame in
+    ``_pair_jaccard`` read 1.30 s.
 
     Measured (r11 scale stress, BASELINE.md round-11 addendum): 28x
     wall at 30x corpus with exactly-30x output pairs — the per-doc
     128-hash signature build is inherently linear and dominates; no
     superlinear pair blow-up at any measured scale."""
     sh = _shingle_rows(spark, sf_dir)
-    sig = sh.groupBy("doc_id").agg(
-        *[
-            F.min(F.xxhash64("h", F.lit(i))).alias(f"h{i}")
-            for i in range(MINHASH_HASHES)
-        ]
-    )
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(j).alias("band_id"),
-                F.xxhash64(
-                    *[f"h{j * MINHASH_ROWS + r}" for r in range(MINHASH_ROWS)]
-                ).alias("band_key"),
-            )
-            for j in range(MINHASH_BANDS)
-        ]
-    )
-    bands = sig.select("doc_id", F.explode(band_structs).alias("band")).select(
-        "doc_id", "band.band_id", "band.band_key"
-    )
+    bands = _minhash_bands(sh)
     a, b = bands.alias("a"), bands.alias("b")
     cand = (
         a.join(b, ["band_id", "band_key"])
@@ -684,9 +718,10 @@ def _simhash_sig(th: DataFrame, bits: int) -> DataFrame:
     and k+bits/2 share one 64-bit sum (low/high 32-bit halves): the
     per-row term is ``((h>>k)&1) + (((h>>(k+half))&1) << 32)``, so the
     summed low half is exactly bit k's vote count and the high half bit
-    (k+half)'s — carry-free while a document has < 2^31 tokens (a
-    multi-billion-token single document; asserted nowhere because the
-    fixture and any real corpus sit orders of magnitude below).  Packing
+    (k+half)'s — carry-free while a document has < 2^31 tokens.  Past
+    that (a multi-billion-token single document) the assembly fails
+    loudly through :func:`_packed_votes_guard` instead of emitting a
+    corrupt signature.  Packing
     halves the aggregation-state width and the map-side partial rows the
     shuffle carries (65 → 33 columns for the 64-bit op — guide §5/§2.3).
     The kernel is shared by the production xxhash64 op and its md5
@@ -723,7 +758,21 @@ def _simhash_sig(th: DataFrame, bits: int) -> DataFrame:
     sig_expr = bit(0)
     for k in range(1, bits):
         sig_expr = sig_expr.bitwiseOR(F.shiftleft(bit(k), k))
-    return votes.select("doc_id", sig_expr.alias("sig"), "n")
+    sig = _packed_votes_guard(F.col("n"), sig_expr)
+    return votes.select("doc_id", sig.alias("sig"), "n")
+
+
+def _packed_votes_guard(n: Column, value: Column) -> Column:
+    """``value`` while a document's ``n`` tokens keep the packed 32-bit
+    vote halves of :func:`_simhash_sig` carry-free (n < 2^31); a
+    ``raise_error`` beyond, so the limit can never corrupt silently."""
+    return F.when(n < F.lit(1 << 31), value).otherwise(
+        F.raise_error(F.concat(
+            F.lit("simhash packed votes overflow: a document has "),
+            n.cast("string"),
+            F.lit(" tokens, the limit is 2^31 - 1"),
+        ))
+    )
 
 
 @register(

@@ -1,9 +1,10 @@
 """SparkSession construction tuned for this engine.
 
 Local test posture: one JVM, ``local[N]`` threads, shuffle partitions sized
-to cores (not the 200 default).  Cluster posture (100 TB): the same builder
-minus master/memory overrides — AQE, skew-join handling and broadcast
-thresholds are the scale levers and are on by default here.
+to cores (not the 200 default), a driver heap sized to the machine's memory.
+Cluster posture (100 TB): the same builder minus master/memory overrides —
+AQE, skew-join handling and broadcast thresholds are the scale levers and
+are on by default here.
 """
 
 from __future__ import annotations
@@ -12,14 +13,35 @@ import os
 
 from pyspark.sql import SparkSession
 
+#: Share of MemTotal given to the driver heap by default.  The rest holds
+#: the JVM's off-heap (code cache, metaspace, direct buffers), the Python
+#: workers and the test process itself.
+HEAP_FRACTION = 5 / 8
+
+
+def resources() -> tuple[int, str]:
+    """``(cores, driver heap)`` for a local session on this machine.
+
+    ``SPARK_GRAFT_CPUS`` and ``SPARK_GRAFT_DRIVER_MEM`` override; otherwise
+    cores come from the affinity mask (the cores this process may run on,
+    not the host's) and the heap is ``HEAP_FRACTION`` of MemTotal in whole
+    GiB.  Resolved when a session is built or its confs are applied, never
+    at import, so an override set after import still takes effect."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS")
+    mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if mem is None:
+        with open("/proc/meminfo") as fh:
+            kb = next(int(line.split()[1]) for line in fh
+                      if line.startswith("MemTotal:"))
+        mem = f"{max(1, int(kb * HEAP_FRACTION) >> 20)}g"
+    return int(cpus) if cpus else len(os.sched_getaffinity(0)), mem
+
+
 #: Confs that are safe (and wanted) on both local test runs and a real
 #: cluster.  Runtime-settable ones are also re-applied per-query by the
-#: registry so driver-owned sessions behave identically.
+#: registry so driver-owned sessions behave identically; the shuffle
+#: partition count joins them in :func:`engine_confs`.
 ENGINE_CONFS: dict[str, str] = {
-    # Shuffle parallelism sized to local cores (not the 200 default) — also
-    # applied to driver-owned sessions at query time; AQE coalesces below
-    # this at runtime, and a real cluster would raise it to 2-3× total cores.
-    "spark.sql.shuffle.partitions": os.environ.get("SPARK_GRAFT_CPUS", "32"),
     # AQE: runtime coalescing of shuffle partitions + skew-join splitting.
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
@@ -47,13 +69,20 @@ ENGINE_CONFS: dict[str, str] = {
 }
 
 
+def engine_confs() -> dict[str, str]:
+    """:data:`ENGINE_CONFS` plus shuffle parallelism sized to local cores
+    (not the 200 default) — also applied to driver-owned sessions at query
+    time; AQE coalesces below this at runtime, and a real cluster would
+    raise it to 2-3× total cores."""
+    return {"spark.sql.shuffle.partitions": str(resources()[0]), **ENGINE_CONFS}
+
+
 def builder(app_name: str = "dataengineer_scripts_spark") -> SparkSession.Builder:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus, heap = resources()
     b = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", heap)
         # ~90 registered queries compile thousands of generated classes in
         # one JVM; the 240 MB default code cache fills and HotSpot silently
         # stops JIT-compiling — codegen-heavy aggregates then run
@@ -70,7 +99,7 @@ def builder(app_name: str = "dataengineer_scripts_spark") -> SparkSession.Builde
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.files.maxPartitionBytes", "134217728")
     )
-    for k, v in ENGINE_CONFS.items():
+    for k, v in engine_confs().items():
         b = b.config(k, v)
     return b
 
@@ -124,7 +153,7 @@ def apply_runtime_confs(spark: SparkSession) -> None:
     depend on its timezone or Arrow settings, so every registered query
     re-applies these (all of them are runtime-settable).
     """
-    for k, v in ENGINE_CONFS.items():
+    for k, v in engine_confs().items():
         try:
             spark.conf.set(k, v)
         except Exception:  # pragma: no cover - static conf on some builds

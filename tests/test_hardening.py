@@ -586,3 +586,27 @@ def test_streaks_match_python_reference(spark, sf_dir):
         for r in DEFS["x_win_streaks"].fn(spark, sf_dir).collect()
     }
     assert got == want
+
+
+def test_default_heap_fits_physical_memory(spark, monkeypatch):
+    """The session's heap, and the default with no override, are at most
+    MemTotal: a 48g default OOM-killed the suite on a 15 GB machine."""
+    from dataengineer_scripts_spark import session
+
+    def gib(v: str) -> float:
+        units = {"k": 2**-20, "m": 2**-10, "g": 1, "t": 2**10}
+        return float(v[:-1]) * units[v[-1].lower()]
+
+    with open("/proc/meminfo") as fh:
+        total_gib = next(int(ln.split()[1]) for ln in fh
+                         if ln.startswith("MemTotal:")) / 2**20
+    assert gib(spark.conf.get("spark.driver.memory")) <= total_gib
+    monkeypatch.delenv("SPARK_GRAFT_DRIVER_MEM", raising=False)
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    cpus, heap = session.resources()
+    assert 1 <= gib(heap) <= total_gib
+    assert cpus == len(os.sched_getaffinity(0))
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "2g")
+    assert session.resources() == (3, "2g")
+    assert session.engine_confs()["spark.sql.shuffle.partitions"] == "3"

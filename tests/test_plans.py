@@ -6,6 +6,8 @@ benchmark does."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
 from dataengineer_scripts_spark import registry
@@ -73,6 +75,50 @@ def test_no_cartesian_in_pair_generation(spark, sf_dir):
                  "x_llm_dedup_simhash"):
         plan = _physical(DEFS[name].fn(spark, sf_dir))
         assert "BroadcastNestedLoopJoin" not in plan, name
+
+
+def test_minhash_signature_runs_in_whole_stage_codegen(spark, sf_dir):
+    # A 128-column signature row is 129 aggregate fields, over
+    # spark.sql.codegen.maxFields (100): partial and final aggregates then
+    # run interpreted.  The chunked signature keeps every HashAggregate of
+    # the FINAL adaptive plan (read after the frame ran) under a `*(n)`.
+    df = DEFS["x_llm_dedup_minhash"].fn(spark, sf_dir)
+    df.collect()
+    plan = _physical(df)
+    assert "isFinalPlan=true" in plan
+    final = plan.split("== Final Plan ==")[1].split("== Initial Plan ==")[0]
+    aggs = [ln for ln in final.splitlines() if "HashAggregate(" in ln]
+    assert len(aggs) >= 4, final  # signature partial+final, candidates, sizes
+    for ln in aggs:
+        assert re.search(r"\*\(\d+\) HashAggregate\(", ln), ln
+
+
+def test_minhash_chunked_bands_equal_one_row_signature(spark, sf_dir):
+    # Kernel identity: 16 chunk rows of 8 members per document yield
+    # exactly the (doc_id, band_id, band_key) rows of the 128-column
+    # one-row signature with the same int seeds.
+    from pyspark.sql import functions as F
+
+    from dataengineer_scripts_spark.operators import llm
+
+    sh = llm._shingle_rows(spark, sf_dir)
+    sig = sh.groupBy("doc_id").agg(
+        *[F.min(F.xxhash64("h", F.lit(i))).alias(f"h{i}")
+          for i in range(llm.MINHASH_HASHES)]
+    )
+    rows = llm.MINHASH_ROWS
+    ref = sig.select("doc_id", F.explode(F.array(*[
+        F.struct(
+            F.lit(j).alias("band_id"),
+            F.xxhash64(*[f"h{j * rows + r}" for r in range(rows)]).alias("band_key"),
+        )
+        for j in range(llm.MINHASH_BANDS)
+    ])).alias("b")).select("doc_id", "b.band_id", "b.band_key")
+    got = llm._minhash_bands(sh)
+    assert got.schema == ref.schema
+    assert got.count() == sh.select("doc_id").distinct().count() * llm.MINHASH_BANDS
+    assert got.exceptAll(ref).count() == 0
+    assert ref.exceptAll(got).count() == 0
 
 
 def test_knn_batch_never_shuffles_the_corpus(spark, sf_dir):

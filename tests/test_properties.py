@@ -734,6 +734,22 @@ def test_simhash_signature_matches_python_majority(spark, rows, bits):
         assert got[d] == (sig, len(hs)), (d, hs, bits)
 
 
+def test_simhash_packed_votes_guard_fails_loudly(spark):
+    """At 2^31 tokens in one document the packed 32-bit vote halves of
+    _simhash_sig would carry into each other; the guard in its assembly
+    Project must raise instead of passing a corrupt signature through."""
+    from dataengineer_scripts_spark.operators.llm import _packed_votes_guard
+
+    def run(n):
+        return spark.range(1).select(
+            _packed_votes_guard(F.lit(n), F.lit(7)).alias("v")
+        ).collect()[0].v
+
+    assert run(2**31 - 1) == 7
+    with pytest.raises(Exception, match="simhash packed votes overflow"):
+        run(2**31)
+
+
 @st.composite
 def _xlsx_row_cells(draw):
     """A row as (value, explicit_col_or_None) cells: values mix numbers

@@ -17,7 +17,7 @@ HEADLINERS = [
     ("x_join_bucketed", "zero Exchange: co-located sort-merge join over 8 pre-bucketed buckets"),
     ("x_sort_limit_topk", "TakeOrderedAndProject — top-k without a global sort"),
     ("x_join_asof", "one shuffle + one sort (window running max) — no range-join pair explosion"),
-    ("x_llm_dedup_minhash", "shingle hash → one aggregate for the 128-hash signature → band equi-join; no cartesian anywhere"),
+    ("x_llm_dedup_minhash", "shingle hash → one codegen'd aggregate for the 128-hash signature as 16 chunk rows of 8 → band equi-join; no cartesian anywhere"),
     ("x_llm_dedup_embed", "upper-triangle blocked GEMM: explode to P cells → one hash-partition → applyInPandas; Arrow exchange only"),
     ("x_llm_ann_ivf", "narrow mapInPandas assignment (driver-held centroid model) → broadcast probe join → partial top-k"),
     ("x_join_multiway_analytic", "all three filters pushed to their scans; AQE-chosen join strategy; TakeOrderedAndProject top-10"),
@@ -62,7 +62,6 @@ HEADLINERS = [
 
 
 def main() -> None:
-    os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
     from contextlib import redirect_stdout
     from io import StringIO
 

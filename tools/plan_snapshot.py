@@ -1,5 +1,7 @@
 """Dump `.explain("formatted")` of named registered queries to files —
-the per-round before/after plan evidence (plans/r<N>/<query>_{before,after}.txt).
+the per-change before/after plan evidence (plans/<tag>/<query>_{before,after}.txt).
+Each frame is collected first, so the dump is the FINAL adaptive plan, with
+the whole-stage codegen marks (`* Op`) of the stages that actually ran.
 
 Usage: python tools/plan_snapshot.py <outdir> <suffix> <query> [<query> ...]
 e.g.:  python tools/plan_snapshot.py plans/r20 before x_graph_pagerank_converged
@@ -17,7 +19,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 def main() -> int:
     outdir, suffix, names = sys.argv[1], sys.argv[2], sys.argv[3:]
-    os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
     from dataengineer_scripts_spark import registry
     from dataengineer_scripts_spark.session import get_spark
 
@@ -28,6 +29,7 @@ def main() -> int:
     os.makedirs(outdir, exist_ok=True)
     for name in names:
         df = defs[name].fn(spark, sf)
+        df.collect()
         buf = StringIO()
         with redirect_stdout(buf):
             df.explain("formatted")
