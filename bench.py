@@ -152,8 +152,7 @@ def main() -> None:
     machine_start = _machine_state()
     spark = get_spark("bench")
 
-    # Bench iterates alphabetically regardless of the registry's
-    # driver-facing priority order, so per-query timings stay comparable
+    # Bench iterates alphabetically, so per-query timings stay comparable
     # with earlier rounds' shared-session runs.
     qs = dict(sorted(registry.queries().items()))
     if only:

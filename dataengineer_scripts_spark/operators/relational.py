@@ -18,6 +18,12 @@ Design notes (100 TB posture):
 
 from __future__ import annotations
 
+# Module-level so `typing.get_type_hints` can resolve the stringified
+# `pd.Series` annotations that `from __future__ import annotations` produces
+# on pandas_udf signatures (PySpark's infer_eval_type resolves them against
+# THIS module's globals — a function-local import raises UNSUPPORTED_SIGNATURE).
+import pandas as pd
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -1150,7 +1156,6 @@ def x_udf_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Vectorized (Arrow-batched) Pandas UDF — the sanctioned slow path
     (SURVEY.md §2.10): one Arrow batch per 10k rows, numpy math inside,
     never row-at-a-time Python."""
-    import pandas as pd  # noqa: F401
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("double")
@@ -2610,20 +2615,17 @@ def x_udf_pandas_grouped_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     import math
 
     import numpy as np
-    from pyspark.sql.functions import PandasUDFType, pandas_udf
+    from pyspark.sql.functions import pandas_udf
 
-    # explicit functionType (not hint inference): this module stringifies
-    # annotations via `from __future__ import annotations`, so pd.Series
-    # hints would not resolve here (llm.py:44 documents the same trap)
-    @pandas_udf("double", PandasUDFType.GROUPED_AGG)
-    def trimmed_mean(v):
+    @pandas_udf("double")
+    def trimmed_mean(v: pd.Series) -> float:
         xs = np.sort(v.to_numpy())
         k = int(len(xs) * 0.1)
         kept = xs[k : len(xs) - k]
         return math.fsum(float(x) for x in kept) / len(kept)
 
-    @pandas_udf("long", PandasUDFType.GROUPED_AGG)
-    def n_kept(v):
+    @pandas_udf("long")
+    def n_kept(v: pd.Series) -> int:
         k = int(len(v) * 0.1)
         return len(v) - 2 * k
 

@@ -38,7 +38,7 @@ class QueryDef:
     #: the registrations.  Gate prose may embed ``{grade:<op_id>}``,
     #: which the generator replaces with the named companion's latest
     #: merged driver attestation (e.g. "driver pass r13") — companion
-    #: grades in the table then refresh themselves as windows rotate.
+    #: grades in the table then refresh themselves with each merge.
     why_no_oracle: str | None = None
     gate: str | None = None
 
@@ -118,109 +118,20 @@ def _load_all() -> None:
     from .streaming import windows  # noqa: F401
 
 
-# The grading driver only records CORRECTNESS rows for the first ~50 ids it
-# sees; the window ROTATES each round to keep attestations fresh.  After the
-# r19 window (the r18/r19 rotation covered everything graded ≤r13) the merge
-# of CORRECTNESS_r01–r19.json puts the stalest cohort at exactly 29 ids
-# graded r14 (the remaining TPC-H block, the r14 join/window additions, the
-# PQ/simhash oracle companions) and 50 at r15.  This r20 window (prescribed
-# by the r19 verdict, item 8: "rotate to the next stalest cohort, post-r14
-# ids") takes those 29 r14 ids plus the 21 alphabetically-first r15 ids
-# (exec_threadpool … x_agg_weighted_stats; the remaining 29 r15 ids rotate
-# in next round).  Every id in this window is oracle-bearing — no rows-only
-# tail this time (the slip-safety convention of listing rows-only ids LAST
-# stands whenever one rotates in).  After this window the stalest grade
-# becomes r15.
-_PRIORITY_NAMES = (
-    # (0) the r14-era oracle-bearing ids — stalest cohort
-    "x_join_inner",
-    "x_join_left",
-    "x_join_range",
-    "x_join_semi",
-    "x_llm_embed_pq",
-    "x_llm_ngram_novelty",
-    "x_llm_pq_adc_scores",
-    "x_llm_simhash_signature",
-    "x_llm_tfidf_topk",
-    "x_llm_vocab_coverage",
-    "x_mm_dedup_binary",
-    "x_sql_text_api",
-    "x_stream_windowed_topk",
-    "x_tpch_q10_returned_items",
-    "x_tpch_q13_customer_distribution",
-    "x_tpch_q14_promo_revenue",
-    "x_tpch_q18_large_volume_customer",
-    "x_tpch_q19_discounted_revenue",
-    "x_tpch_q22_global_sales_opportunity",
-    "x_tpch_q4_order_priority",
-    "x_tpch_q5_local_supplier_volume",
-    "x_tpch_q6_forecast_revenue",
-    "x_ts_attribution_last_touch",
-    "x_ts_rolling_zscore",
-    "x_ts_time_weighted_avg",
-    "x_udf_pandas_grouped_agg",
-    "x_win_cohort_revenue",
-    "x_win_range_frame",
-    "x_win_streaks",
-    # (1) the alphabetically-first r15-era oracle-bearing ids, padding to 50
-    "exec_threadpool",
-    "flagship_corpus_health",
-    "flagship_curation",
-    "flagship_health",
-    "flagship_sync",
-    "flt_key_membership",
-    "flt_neq_const",
-    "flt_nonempty_guard",
-    "flt_not_in_list",
-    "flt_not_null",
-    "proj_alias_literal",
-    "proj_nested_field",
-    "x_agg_ab_test",
-    "x_agg_audience_overlap",
-    "x_agg_benford_distribution",
-    "x_agg_bitmask_usage",
-    "x_agg_bool_logic",
-    "x_agg_decile_edges",
-    "x_agg_grouping_id",
-    "x_agg_percentile_cont_disc",
-    "x_agg_weighted_stats",
-)
-_PRIORITY_RANK = {n: i for i, n in enumerate(_PRIORITY_NAMES)}
-
-
-def _driver_order(
-    names: list[str], rank: dict[str, int] | None = None
-) -> list[str]:
-    """Priority ids first in listed order, everything else alphabetical.
-
-    ``rank`` defaults to the module's rotation window; the parameter exists
-    so the window-rotation PROPERTY test (r15 verdict item 7) can drive the
-    same code path with arbitrary legal priority tuples instead of only the
-    current one.
-    """
-    if rank is None:
-        rank = _PRIORITY_RANK
-
-    def key(n: str) -> tuple[int, str]:
-        return (rank.get(n, len(rank)), n)
-
-    return sorted(names, key=key)
-
-
 def queries() -> dict[str, QueryFn]:
     _load_all()
-    return {n: _REGISTRY[n].fn for n in _driver_order(list(_REGISTRY))}
+    return {n: _REGISTRY[n].fn for n in sorted(_REGISTRY)}
 
 
 def oracles() -> dict[str, str]:
     _load_all()
     return {
         n: _REGISTRY[n].oracle
-        for n in _driver_order(list(_REGISTRY))
+        for n in sorted(_REGISTRY)
         if _REGISTRY[n].oracle
     }
 
 
 def definitions() -> dict[str, QueryDef]:
     _load_all()
-    return {n: _REGISTRY[n] for n in _driver_order(list(_REGISTRY))}
+    return {n: _REGISTRY[n] for n in sorted(_REGISTRY)}

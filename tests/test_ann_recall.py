@@ -6,9 +6,11 @@ on real clustered embeddings both paths recall far higher."""
 
 from __future__ import annotations
 
+import numpy as np
 import pytest
 
 from dataengineer_scripts_spark import registry
+from dataengineer_scripts_spark.operators import llm
 
 DEFS = registry.definitions()
 
@@ -42,10 +44,9 @@ def test_ann_recall_vs_exact(spark, sf_dir, name, floor):
 
 def test_adc_scores_companion_agrees_with_topk(spark, sf_dir):
     """The oracle-checked ADC companion must reproduce the rows-only
-    top-k op's scores: for every top-k pair of a shared query, the
-    micro-integer score equals the double score within the rounding
-    budget (8 LUT entries pinned at ±0.5e-6 each, plus the top-k's own
-    round-6 → ≤ 4.5e-6; measured 2e-6).  This is the local half of the
+    top-k op's scores: both run ``_pq_adc``'s integer path, so for every
+    top-k pair of a shared query the reported double is exactly the
+    companion's micro-integer over 1e6.  This is the local half of the
     r08 attestation bridge — the driver hash-matches the companion, this
     test pins the companion to the production op."""
     from dataengineer_scripts_spark.operators.llm import ADC_ORACLE_QUERIES
@@ -61,5 +62,36 @@ def test_adc_scores_companion_agrees_with_topk(spark, sf_dir):
     ]
     assert topk  # shared queries exist
     for r in topk:
-        assert (r.query_id, r.neighbor_id) in micro
-        assert abs(micro[(r.query_id, r.neighbor_id)] / 1e6 - r.adc_score) <= 5e-6
+        assert round(r.adc_score * 1e6) == micro[(r.query_id, r.neighbor_id)]
+
+
+def _frozen_ivf(spark, e, k):
+    rows = llm._ann_model_rows(e, max(llm.IVF_CELLS, llm.KNN_N_QUERIES))
+    cmat = np.array([r.e for r in rows if r.vec_id < llm.IVF_CELLS])
+    qrows = [r for r in rows if r.vec_id < llm.KNN_N_QUERIES]
+    return llm._ann_topk(llm._ivf_search(spark, e, cmat, qrows, k), "cosine")
+
+
+def _frozen_lsh(spark, e, k):
+    rows = llm._ann_model_rows(e, max(llm.LSH_PLANES, llm.KNN_N_QUERIES))
+    planes = np.array([r.e for r in rows if r.vec_id < llm.LSH_PLANES])
+    qrows = [r for r in rows if r.vec_id < llm.KNN_N_QUERIES]
+    return llm._ann_topk(llm._lsh_search(spark, e, planes, qrows, k), "cosine")
+
+
+def _frozen_pq(spark, e, k):
+    rows = llm._ann_model_rows(e, max(llm.PQ_K, llm.KNN_N_QUERIES))
+    _, cb = llm._pq_codebook(rows)
+    qrows = [r for r in rows if r.vec_id < llm.KNN_N_QUERIES]
+    return llm._ann_topk(llm._pq_adc(e, cb, qrows, k), "adc_micro")
+
+
+@pytest.mark.parametrize("search", [_frozen_ivf, _frozen_lsh, _frozen_pq])
+def test_partial_topk_is_exact(spark, sf_dir, search):
+    """Each search kernel's partition-local top-k loses nothing: under the
+    companion's frozen model, ranking the k-per-batch partials gives the
+    same rows as ranking the full score set the companion emits."""
+    e = llm._normalized(spark, sf_dir)
+    full = sorted(search(spark, e, None).collect())
+    assert len(full) == llm.KNN_N_QUERIES * llm.KNN_K
+    assert sorted(search(spark, e, llm.KNN_K).collect()) == full

@@ -133,21 +133,26 @@ def test_knn_batch_never_shuffles_the_corpus(spark, sf_dir):
 
 
 def test_ann_score_companions_never_shuffle_the_corpus(spark, sf_dir):
-    # The r10 oracle companions must keep the production ANN geometry:
-    # probe set broadcasts (BroadcastHashJoin), corpus flows through
-    # narrow mapInPandas passes — no corpus-sized hash exchange.  IVF
-    # has none at all; LSH gets exactly one for the tiny per-pair
-    # band-count aggregate (candidate rows, not corpus rows).
-    ivf = _physical(DEFS["x_llm_ann_ivf_scores"].fn(spark, sf_dir))
-    assert "BroadcastHashJoin" in ivf
-    assert ivf.count("Exchange hashpartitioning") == 0
-    assert "CartesianProduct" not in ivf
-    assert "BroadcastNestedLoopJoin" not in ivf
-    lsh = _physical(DEFS["x_llm_ann_lsh_scores"].fn(spark, sf_dir))
-    assert "BroadcastHashJoin" in lsh
-    assert lsh.count("Exchange hashpartitioning") == 1
-    assert "CartesianProduct" not in lsh
-    assert "BroadcastNestedLoopJoin" not in lsh
+    # Both ops of each ANN family run one search kernel, so the r10 oracle
+    # companions and the production top-k ops share its geometry: probe
+    # set broadcasts (BroadcastHashJoin), corpus flows through narrow
+    # mapInPandas passes — no corpus-sized hash exchange.  The IVF
+    # companion has none at all; LSH adds exactly one for the tiny
+    # per-pair band-count aggregate (candidate rows, not corpus rows);
+    # each production op adds one for the final window over its partial
+    # top-k rows.
+    for name, hash_exchanges, probe_join in [
+        ("x_llm_ann_ivf_scores", 0, True),
+        ("x_llm_ann_lsh_scores", 1, True),
+        ("x_llm_ann_ivf", 1, True),
+        ("x_llm_ann_lsh", 2, True),
+        ("x_llm_pq_adc_topk", 1, False),
+    ]:
+        plan = _physical(DEFS[name].fn(spark, sf_dir))
+        assert ("BroadcastHashJoin" in plan) == probe_join, name
+        assert plan.count("Exchange hashpartitioning") == hash_exchanges, name
+        assert "CartesianProduct" not in plan, name
+        assert "BroadcastNestedLoopJoin" not in plan, name
 
 
 def test_knn_batch_blocked_is_two_bounded_shuffles(spark, sf_dir):

@@ -84,8 +84,7 @@ def driver_state() -> dict[str, str]:
 
 def rows(state: dict[str, str]) -> list[str]:
     out = []
-    # alphabetical for stable docs (the registry's driver-facing iteration
-    # order is priority-rotated; see registry._driver_order)
+    # alphabetical for stable docs
     for name, d in sorted(registry.definitions().items()):
         fn = inspect.unwrap(d.fn)
         path = os.path.relpath(inspect.getsourcefile(fn), os.path.join(REPO, PKG))
@@ -103,8 +102,8 @@ def gate_rows(state: dict[str, str]) -> list[str]:
     the registrations' why_no_oracle/gate metadata (r13 verdict item 7:
     the two §2.11 tables must not be able to drift apart).  ``{grade:op}``
     placeholders in gate prose resolve to the named companion's latest
-    merged driver attestation, so companion grades refresh themselves as
-    the grading window rotates."""
+    merged driver attestation, so companion grades refresh themselves
+    with each merge."""
 
     def grade(m: re.Match) -> str:
         name = m.group(1)

@@ -19,7 +19,7 @@ HEADLINERS = [
     ("x_join_asof", "one shuffle + one sort (window running max) — no range-join pair explosion"),
     ("x_llm_dedup_minhash", "shingle hash → one codegen'd aggregate for the 128-hash signature as 16 chunk rows of 8 → band equi-join; no cartesian anywhere"),
     ("x_llm_dedup_embed", "upper-triangle blocked GEMM: explode to P cells → one hash-partition → applyInPandas; Arrow exchange only"),
-    ("x_llm_ann_ivf", "narrow mapInPandas assignment (driver-held centroid model) → broadcast probe join → partial top-k"),
+    ("x_llm_ann_ivf", "the shared `_ivf_search` kernel: narrow mapInPandas assignment (driver-held centroid model) → broadcast probe join → scoring pass with a partial top-k → one final rank window"),
     ("x_join_multiway_analytic", "all three filters pushed to their scans; AQE-chosen join strategy; TakeOrderedAndProject top-10"),
     ("x_llm_sample_stratified", "zero Exchange: md5-bucket keep decision is a codegen'd scan-side filter"),
     ("x_llm_pack_sequences", "one Exchange (the lang window) — packing is a windowed prefix-sum, not a stateful scan"),
@@ -55,7 +55,7 @@ HEADLINERS = [
     ("x_etl_sample_weighted", "weighted sampling as deterministic top-k by hash-derived exponential key: TakeOrderedAndProject (partial per-partition top-k) — the r08 verdict's unpartitioned row_number window is gone; the only Window ranks the k-row result"),
     ("x_join_range_bucketed", "fact-fact interval join bucketized to an equi hash join (3x build-side bucket explode, |dt| residual) — no nested loop, no cartesian"),
     ("x_llm_zipf_fit", "two-level vocab rank (range shuffle + pid-partitioned row_number + broadcast offsets) — the r09 verdict's full-vocabulary single-partition sort is gone; only the P-row offsets window and the 1-row moments aggregate funnel"),
-    ("x_llm_ann_ivf_scores", "oracle companion of the IVF search: driver-held quantizer + two narrow mapInPandas passes with a broadcast probe join between them — corpus never shuffled"),
+    ("x_llm_ann_ivf_scores", "oracle companion of the IVF search: the same `_ivf_search` kernel with no top-k (frozen quantizer, two narrow mapInPandas passes with a broadcast probe join between them, no window) — corpus never shuffled"),
     ("x_llm_dedup_exact", "two-phase hash-keyed exact dedup: phase-1 buckets are a checkpointed scan (corpus exchange keyed on xxhash64(text), asserted pre-checkpoint in tests/test_plans.py); the only text-keyed exchange sits above the broadcast semi join on the duplicate-hash set"),
     ("x_tpch_q9_product_type_profit", "six-table three-key profit rollup over the DERIVED partsupp: p_name contains-filter pushed to the part scan, part/supplier/nation broadcast, the session-shared checkpointed pair set joined AQE-sized; the only fact-fact Exchange is the orders join"),
 ]
